@@ -196,7 +196,8 @@ object Compactor {
     // with the superseded files' dir
     val sidecars = KeyIndex.sidecarNames(dir)
       .flatMap(n => KeyIndex.indexColsOf(dir, n).map(n -> _))
-    val df = spark.read.parquet(dir)
+    // the recorded schema spares the read its footer-inference job
+    val df = manifest.sparkSchema.fold(spark.read)(spark.read.schema).parquet(dir)
 
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val totalBytes = fs.getContentSummary(new Path(dir)).getLength
@@ -274,14 +275,13 @@ object Compactor {
     val numFiles = math.max(1,
       math.ceil(affectedBytes.toDouble / targetFileBytes).toInt)
 
-    val df0 = StagedRewrite.readFiles(spark, dir, affected.map(_.path), partitioned)
-    val keys =
-      if (manifest.layoutCols.isEmpty) Nil
-      else LayoutWriter.curveKeyOrCols(
-        df0, manifest.layoutCols, manifest.bits, manifest.layout)
+    val schema = ZoneMap.schemaOf(spark, dir, manifest)
+    val df0 = StagedRewrite.readFiles(spark, dir, affected.map(_.path), partitioned,
+      Some(schema))
     val arranged =
-      if (keys.isEmpty) df0.repartition(numFiles)
-      else df0.repartitionByRange(numFiles, keys: _*).sortWithinPartitions(keys: _*)
+      if (manifest.layoutCols.isEmpty) df0.repartition(numFiles)
+      else LayoutWriter.sortedRewrite(df0, df0, manifest, numFiles,
+        sourceRows = affected.map(_.rows).sum)
     val staging = dir.stripSuffix("/") + ".compactw_tmp"
     val moved = StagedRewrite.writeAndMove(
       spark, dir, staging, arranged, manifest.hivePartitions)
@@ -289,8 +289,9 @@ object Compactor {
     val newEntries =
       if (moved.isEmpty) Seq.empty[FileEntry]
       else ZoneMap.collectStatsDf(
-        StagedRewrite.readFiles(spark, dir, moved, partitioned), manifest.statsCols)
-    val updated = manifest.copy(files = untouched ++ newEntries)
+        StagedRewrite.readFiles(spark, dir, moved, partitioned, Some(schema)),
+        manifest.statsCols)
+    val updated = manifest.copy(files = untouched ++ newEntries, schema = Some(schema.json))
     // commit order matches KeyedDelta/Upserter (round-11 ADVICE):
     // manifest first, superseded files after — never a manifest that
     // references deleted files

@@ -126,6 +126,13 @@ object KeyIndex {
   private implicit val fmts: Formats = Serialization.formats(NoTypeHints)
   private val MetaName = "_meta.json"
 
+  /** The schema every shard's parquet rows share ([[bloomRows]]; `s` is
+    * the shard dir's partition column). Sidecar reads pass it, so none
+    * pays a footer-inference job.
+    */
+  private val SidecarSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "path STRING, rows BIGINT, bloom BINARY, s INT")
+
   /** What [[update]] did — logged and returned so probes/suites can pin
     * the sidecar-maintenance cost (bytes rewritten per mutation;
     * nonzero only when the amortized GC fired).
@@ -322,10 +329,11 @@ object KeyIndex {
     * the driver receives O(Shards) rows at any table scale.
     */
   private def unionBloomsOf(spark: SparkSession, dir: String, keys: Seq[String],
-      files: Seq[FileEntry], partitioned: Boolean,
+      files: Seq[FileEntry], manifest: TableManifest,
       expected: Long): Map[Int, org.apache.spark.util.sketch.BloomFilter] = {
     import spark.implicits._
-    StagedRewrite.readFiles(spark, dir, files.map(_.path), partitioned)
+    StagedRewrite.readFiles(spark, dir, files.map(_.path),
+        manifest.hivePartitions.nonEmpty, manifest.sparkSchema)
       .filter(keys.map(col(_).isNotNull).reduce(_ && _))
       .select(input_file_name().as("path"), keyHashCol(keys).as("__k"))
       .as[(String, Long)]
@@ -355,11 +363,11 @@ object KeyIndex {
     * identically, so both sides stay consistent.
     */
   private def bloomRows(spark: SparkSession, dir: String, keys: Seq[String],
-      files: Seq[FileEntry], partitioned: Boolean): DataFrame = {
+      files: Seq[FileEntry], manifest: TableManifest): DataFrame = {
     import spark.implicits._
     val maxRows = files.map(_.rows).max
-    val df = StagedRewrite
-      .readFiles(spark, dir, files.map(_.path), partitioned)
+    val df = StagedRewrite.readFiles(spark, dir, files.map(_.path),
+      manifest.hivePartitions.nonEmpty, manifest.sparkSchema)
     // input_file_name is the runtime path; [[norm]] makes it and the
     // manifest's stored paths compare equal
     val wanted = files.map(f => norm(f.path) -> f.rows).toMap
@@ -398,8 +406,7 @@ object KeyIndex {
       writeUnions(dir, name, Map.empty, unionsGen = gen, expected = cap)
       writeMeta(dir, keys, indexedGen = gen, name = name); return
     }
-    bloomRows(spark, dir, keys, manifest.files,
-        manifest.hivePartitions.nonEmpty)
+    bloomRows(spark, dir, keys, manifest.files, manifest)
       .write.mode("overwrite").partitionBy("s")
       .parquet(path(dir, name).toString)
     // fresh per-shard unions from the same files (a second column-pruned
@@ -407,7 +414,7 @@ object KeyIndex {
     // meta-less sidecar that lookups skip wholesale
     if (unionsUseful)
       writeUnions(dir, name, unionBloomsOf(spark, dir, keys, manifest.files,
-        manifest.hivePartitions.nonEmpty, cap), unionsGen = gen, expected = cap)
+        manifest, cap), unionsGen = gen, expected = cap)
     else java.nio.file.Files.deleteIfExists(unionsFile(dir, name))
     // meta AFTER the parquet write (overwrite clears the dir); a crash
     // in between leaves a meta-less sidecar, which lookups skip and the
@@ -477,7 +484,7 @@ object KeyIndex {
     import spark.implicits._
     val positives =
       try {
-        spark.read.parquet(selected: _*)
+        spark.read.schema(SidecarSchema).parquet(selected: _*)
           .select(col("path"), col("bloom")).as[(String, Array[Byte])]
           .mapPartitions { it =>
             val ks = bcKeys.value
@@ -549,7 +556,7 @@ object KeyIndex {
         !addedPaths.contains(norm(f.path)))
     val toIndex = added ++ healed
     if (toIndex.nonEmpty) {
-      bloomRows(spark, dir, keys, toIndex, manifest.hivePartitions.nonEmpty)
+      bloomRows(spark, dir, keys, toIndex, manifest)
         .write.mode("append").partitionBy("s").parquet(path(dir, name).toString)
     }
     // union maintenance is AMORTIZED, never per-mutation: files newer
@@ -565,7 +572,7 @@ object KeyIndex {
         if (pending.length > math.max(Shards.toLong, manifest.files.length / 8L)) {
           // batch blooms at the HEADER capacity: byte-compatible merge
           val batch = unionBloomsOf(spark, dir, keys, pending,
-            manifest.hivePartitions.nonEmpty, u.expected)
+            manifest, u.expected)
           val merged = (u.blooms.keySet ++ batch.keySet).iterator.map { s =>
             s -> ((u.blooms.get(s), batch.get(s)) match {
               case (Some(a), Some(b)) => a.mergeInPlace(b); a
@@ -595,14 +602,21 @@ object KeyIndex {
     stats
   }
 
-  /** Reclaim stale rows: rewrite each shard keeping only live-manifest
-    * paths. O(sidecar) — called by [[update]] only once stale rows
-    * amortize it over O(table/2) removals; callable directly from a
-    * maintenance window. Crash-safe per shard (stage + swap; a shard
-    * lost mid-swap only fail-safes its files to affected).
+  /** Reclaim stale rows: keep only live-manifest paths, one row each.
+    * O(sidecar) — called by [[update]] only once stale rows amortize it
+    * over O(table/2) removals; callable directly from a maintenance
+    * window. One read of every shard and one staged `partitionBy("s")`
+    * write, then a per-shard swap: the shard's staged files are renamed
+    * in BEFORE its old files are deleted, and a shard left with no live
+    * rows loses its old files and its dir. Crash-safe at every step: a
+    * shard always holds at least every live row, and the duplicate or
+    * stale rows a crash leaves behind are harmless to lookups (blooms for
+    * one path are interchangeable; dead paths miss the live manifest)
+    * and are reclaimed by the next GC.
     */
   def gc(spark: SparkSession, dir: String, manifest: TableManifest,
       indexedGen: Option[Long] = None, name: String = DirName): UpdateStats = {
+    import org.apache.hadoop.fs.{Path => HPath}
     val keys =
       if (name == DirName) manifest.keyCols
       else readMeta(dir, name).map(_.keys).getOrElse(Nil)
@@ -610,31 +624,41 @@ object KeyIndex {
     // caller (update, after healing) proved a newer one
     val gen = indexedGen.orElse(readMeta(dir, name).map(_.indexedGen)).getOrElse(-1L)
     val live = manifest.files.map(f => norm(f.path)).toSet
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var shardsRewritten = 0
+    val fs = new HPath(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def parts(p: HPath): Seq[HPath] =
+      if (!fs.exists(p)) Nil
+      else fs.listStatus(p).toSeq.map(_.getPath).filter(_.getName.startsWith("part-"))
+    val base = new HPath(path(dir, name).toUri)
+    val staging = new HPath(dir, s".${name}_gc_tmp")
+    fs.delete(staging, true)
+    // one row per live path (duplicate rows only arise from unusual
+    // re-index flows; blooms for one path are interchangeable). Clustered
+    // by shard, which the dedup's (s, path) grouping reuses, so one task
+    // writes each shard and a shard comes back as one file.
+    spark.read.schema(SidecarSchema).parquet(base.toString)
+      .filter(org.apache.spark.sql.graftbridge.Bridge.inSetString(col("path"), live))
+      .repartition(col("s"))
+      .dropDuplicates("s", "path")
+      .write.partitionBy("s").parquet(staging.toString)
+    val staged = fs.listStatus(staging).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith("s=")).map(p => p.getName -> p).toMap
+    val shards = shardDirs(dir, name).map(_.getFileName.toString).toSet ++ staged.keySet
     var bytesRewritten = 0L
-    shardDirs(dir, name).foreach { sd =>
-      val sdir = new org.apache.hadoop.fs.Path(sd.toUri)
-      // same path always shards identically, so per-shard dedup is
-      // global dedup (duplicate rows only arise from unusual re-index
-      // flows; blooms for one path are interchangeable)
-      val kept = spark.read.parquet(sd.toString)
-        .filter(org.apache.spark.sql.graftbridge.Bridge.inSetString(
-          col("path"), live))
-        .dropDuplicates("path")
-      // stage + swap: the shard read above is lazy until the write
-      val tmp = new org.apache.hadoop.fs.Path(
-        dir, s".${name}_tmp_${sd.getFileName}")
-      fs.delete(tmp, true)
-      kept.write.mode("overwrite").parquet(tmp.toString)
-      bytesRewritten += fs.getContentSummary(tmp).getLength
-      fs.delete(sdir, true)
-      fs.rename(tmp, sdir)
-      shardsRewritten += 1
+    shards.toSeq.sorted.foreach { shard =>
+      val dst = new HPath(base, shard)
+      val old = parts(dst)
+      val fresh = staged.get(shard).toSeq.flatMap(parts)
+      if (fresh.nonEmpty) fs.mkdirs(dst)
+      fresh.foreach { src =>
+        bytesRewritten += fs.getFileStatus(src).getLen
+        fs.rename(src, new HPath(dst, src.getName))
+      }
+      old.foreach(fs.delete(_, false))
+      if (fresh.isEmpty) fs.delete(dst, true)
     }
+    fs.delete(staging, true)
     writeMeta(dir, keys, 0L, indexedGen = gen, name = name)
-    UpdateStats(shardsRewritten, bytesRewritten, 0, 0, gc = true)
+    UpdateStats(shards.size, bytesRewritten, 0, 0, gc = true)
   }
 
   /** Post-mutation maintenance for EVERY index sidecar on `dir` —

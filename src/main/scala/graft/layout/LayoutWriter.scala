@@ -193,7 +193,10 @@ object LayoutWriter {
     val keyCols = spec.keyCols
     val statsCols =
       (spec.cols ++ spec.partitionBy ++ keyCols ++ extraStatsCols).distinct
-    val files = ZoneMap.collectStats(spark, dir, statsCols)
+    // the stats pass's read infers the schema anyway; the manifest keeps
+    // it so later readers and mutators need no inference job of their own
+    val written = spark.read.parquet(dir)
+    val files = ZoneMap.collectStatsDf(written, statsCols)
     val manifest = TableManifest(
       layout = spec.layout,
       layoutCols = spec.cols,
@@ -206,21 +209,139 @@ object LayoutWriter {
       precombineCol = spec.precombineCol,
       files = files,
       partitionCols = if (spec.partitionBy.nonEmpty) Some(spec.partitionBy) else None,
-      strOffsets = if (strOffsets.exists(_._2 > 0)) Some(strOffsets) else None)
+      strOffsets = if (strOffsets.exists(_._2 > 0)) Some(strOffsets) else None,
+      schema = Some(written.schema.json))
     ZoneMap.write(dir, manifest)
     manifest
   }
 
-  /** The ordering key(s) for a layout: the curve key for zorder/hilbert,
-    * the raw columns for linear, nothing for baseline.
+  /** Target size of a [[sortedRewrite]] sample: ample for the 2^10
+    * per-column rank cuts, and the whole rewrite set of a small upsert.
+    * Wide rewrites sample 64 rows per output file, up to
+    * [[RewriteSampleMax]] rows on the driver.
     */
-  def curveKeyOrCols(
-      df: DataFrame, cols: Seq[String], bits: Int, layout: String,
-      norm: String = "rank"): Seq[Column] =
-    layout match {
-      case "zorder" | "hilbert" => Seq(curveKey(df, cols, bits, layout, norm))
-      case "linear" => cols.map(col)
-      case _ => Nil
+  private val RewriteSampleRows = 1L << 15
+  private val RewriteSampleMax = 1L << 20
+
+  /** Resolution of the sample's hash threshold. */
+  private val SampleBuckets = 1L << 30
+
+  private val RewriteKeyCol = "__graft_ck"
+
+  /** Sorted copy-on-write rewrite of a partial file set (keyed upsert,
+    * scoped compaction) into `numFiles` files in the table's recorded
+    * layout order. The caller writes the result.
+    *
+    * One Spark job collects a deterministic sample of `sampleFrom`, the
+    * rows the rewrite is built from (an upsert passes its pre-dedup
+    * merge, so the sample scan needs no shuffle): a row is drawn iff the
+    * xxhash64 of its layout and record-key values falls under a threshold
+    * set by `sourceRows`, its estimated row count. The driver derives
+    * from that sample both the per-column rank cuts that normalize the
+    * curve coordinates (the rank normalization [[curveKeyAndOffsets]]
+    * applies at write time; string columns strip the sample's common
+    * prefix) and the file cuts on the curve key. Rows go to their file
+    * through [[exactPartition]] and sort by (curve key, record key) —
+    * the raw layout columns instead of the key for linear — behind the
+    * hive partition columns, so the writer's partition ordering is a
+    * prefix and the curve order reaches disk.
+    *
+    * The layout is a function of the input alone. A range partitioner
+    * (`repartitionByRange`) would run a sampling job of its own, and its
+    * sample seed folds in the shuffle's RDD id, so the same rewrite
+    * landed different file cuts after different session histories.
+    */
+  def sortedRewrite(rows: DataFrame, sampleFrom: DataFrame, manifest: TableManifest,
+      numFiles: Int, sourceRows: Long): DataFrame = {
+    val cols = manifest.layoutCols
+    require(cols.nonEmpty, "a sorted rewrite needs layout columns")
+    val curve = manifest.layout
+    val bits =
+      if (curve == "linear") math.min(manifest.bits, 52 / cols.length) else manifest.bits
+    val keys = manifest.keyCols
+    val isStr = cols.map(c => rows.schema(c).dataType == StringType)
+
+    val target = math.min(RewriteSampleMax, math.max(RewriteSampleRows, 64L * numFiles))
+    val rate = target.toDouble / math.max(1L, sourceRows)
+    val drawn =
+      if (rate >= 1.0) sampleFrom
+      else sampleFrom.filter(
+        pmod(xxhash64((cols ++ keys).distinct.map(col): _*), lit(SampleBuckets)) <
+          lit((rate * SampleBuckets).toLong))
+    // strings come back raw: their code depends on the sample's prefix
+    val sample = drawn.select(cols.zip(isStr).map { case (c, str) =>
+      if (str) col(c) else doubleView(sampleFrom, c, Map.empty)
+    }: _*).collect()
+
+    val skips: Map[String, Int] = cols.indices.filter(isStr).map { i =>
+      val vs = sample.iterator.filterNot(_.isNullAt(i)).map(_.getString(i)).toSeq
+      cols(i) -> (if (vs.isEmpty) 0 else StringCode.commonPrefixLen(
+        vs.reduce((a, b) => if (StrOrder.lte(a, b)) a else b),
+        vs.reduce((a, b) => if (StrOrder.gte(a, b)) a else b)))
+    }.toMap
+    // per column, the sample's double views; NULL reads as NaN, which
+    // bucket-indexes to the curve origin exactly as a NULL coordinate does
+    val views: IndexedSeq[Array[Double]] = cols.indices.map { i =>
+      sample.map { r =>
+        if (r.isNullAt(i)) Double.NaN
+        else if (isStr(i)) StringCode.code(r.getString(i), skips(cols(i)))
+        else r.getDouble(i)
+      }
+    }
+    val rankCuts = views.map { v =>
+      val known = v.filterNot(_.isNaN)
+      java.util.Arrays.sort(known)
+      sampleCuts(known, 1 << math.min(bits, 10))
+    }
+    // driver twin of CurveExpressions.rankNormalizedCol
+    val scales = rankCuts.map(c => (1L << bits).toDouble / (c.length + 1))
+    val coords = new Array[Long](cols.length)
+    val sampleKeys = Array.tabulate(sample.length) { r =>
+      cols.indices.foreach { i =>
+        coords(i) = math.floor(Curves.bucketIndex(rankCuts(i), views(i)(r)) * scales(i)).toLong
+      }
+      curveKeyOf(curve, bits, coords)
+    }
+    java.util.Arrays.sort(sampleKeys)
+    val fileCuts = sampleCuts(sampleKeys.map(_.toDouble), numFiles)
+
+    val key = curveKeyCol(curve, bits, cols.indices.map(i =>
+      CurveExpressions.rankNormalizedCol(doubleView(rows, cols(i), skips), rankCuts(i), bits)))
+    val fid = CurveExpressions.bucketIndexCol(col(RewriteKeyCol).cast(DoubleType), fileCuts)
+    val order = manifest.hivePartitions.map(col) ++
+      (if (curve == "linear") cols.map(col) else Seq(col(RewriteKeyCol))) ++ keys.map(col)
+    exactPartition(rows.withColumn(RewriteKeyCol, key), fid, fileCuts.length + 1)
+      .sortWithinPartitions(order: _*)
+      .drop(RewriteKeyCol)
+  }
+
+  /** The `parts - 1` interior quantile cuts of an ascending sample,
+    * duplicates dropped; none for an empty sample.
+    */
+  private def sampleCuts(sorted: Array[Double], parts: Int): Array[Double] =
+    if (sorted.isEmpty) Array.empty
+    else (1 until parts).map(j => sorted((j.toLong * sorted.length / parts).toInt))
+      .distinct.toArray
+
+  /** Interleave normalized coordinates into the layout's ordering key. */
+  private def curveKeyCol(curve: String, bits: Int, norms: Seq[Column]): Column =
+    curve match {
+      case "hilbert" => CurveExpressions.hilbertvalue(bits, norms: _*)
+      case "linear" =>
+        // lexicographic concatenation: code(0) in the high bits, ties
+        // broken by code(1), ... — linear as the degenerate curve whose
+        // "interleave" is per-column blocks (caller caps bits so the
+        // total stays double-exact for the quantile/bucket casts)
+        norms.reduceLeft((hi, lo) => hi * lit(1L << bits) + lo)
+      case _ => CurveExpressions.zvalue(bits, norms: _*)
+    }
+
+  /** Driver twin of [[curveKeyCol]]. */
+  private def curveKeyOf(curve: String, bits: Int, coords: Array[Long]): Long =
+    curve match {
+      case "hilbert" => Curves.hilbertValue(coords, bits)
+      case "linear" => coords.reduceLeft((hi, lo) => hi * (1L << bits) + lo)
+      case _ => Curves.zValue(coords, bits)
     }
 
   /** Curve-key expression: normalize each layout column to [0, 2^bits),
@@ -279,17 +400,7 @@ object LayoutWriter {
           CurveExpressions.normalizedCol(doubleView(df, c, strSkips), lo, hi, bits)
         }
       }
-    val key = curve match {
-      case "hilbert" => CurveExpressions.hilbertvalue(bits, norms: _*)
-      case "linear" =>
-        // lexicographic concatenation: code(0) in the high bits, ties
-        // broken by code(1), ... — linear as the degenerate curve whose
-        // "interleave" is per-column blocks (caller caps bits so the
-        // total stays double-exact for the quantile/bucket casts)
-        norms.reduceLeft((hi, lo) => hi * lit(1L << bits) + lo)
-      case _ => CurveExpressions.zvalue(bits, norms: _*)
-    }
-    (key, strSkips)
+    (curveKeyCol(curve, bits, norms), strSkips)
   }
 
   /** Double view of a column for normalization (dates → days, timestamps →
@@ -312,16 +423,6 @@ object LayoutWriter {
       case dt => throw new IllegalArgumentException(s"cannot curve-order $c: $dt")
     }
 
-  /** Snap each sampled z-key cut to the COARSEST power-of-two boundary
-    * that stays within its slack window (half the gap to each neighbor
-    * cut, so rough balance is preserved). Coarser alignment = whole
-    * quadrants at a higher level = tighter per-file bounding boxes.
-    * Sequential: each window is additionally floored just above the
-    * previous snapped cut, so the cut COUNT survives (file sizing is a
-    * real constraint — merging cuts doubles a file). Pathological
-    * integer-adjacent cuts may still collide; the final distinct only
-    * fires then.
-    */
   /** Shuffle each row to EXACTLY partition `fid` (0 <= fid < n).
     *
     * `repartitionByRange(n, fid)` on a discrete bucket id cannot do
@@ -332,31 +433,44 @@ object LayoutWriter {
     * partition on a driver-computed remap value v(p) chosen so that
     * pmod(murmur3(v), n) == p — HashPartitioning's own routing function
     * (functions.hash is the same Murmur3/seed-42) then sends bucket p
-    * precisely to partition p. One bounded probe job computes the remap;
-    * expected coverage is n·ln n candidates (coupon collector), batched.
+    * precisely to partition p. No Spark job: [[exactPartitionRemap]]
+    * runs that routing function on the driver.
     */
   private[layout] def exactPartition(df: DataFrame, fid: Column, n: Int): DataFrame = {
-    val spark = df.sparkSession
-    val remap = new Array[Long](n)
-    val seen = new Array[Boolean](n)
-    var found = 0
-    var from = 0L
-    while (found < n) {
-      val batch = math.max(16L * n, 1024L)
-      val probe = spark.range(from, from + batch)
-        .select(col("id"), pmod(hash(col("id")), lit(n)).as("p"))
-        .collect()
-      probe.foreach { r =>
-        val p = r.getInt(1)
-        if (!seen(p)) { seen(p) = true; remap(p) = r.getLong(0); found += 1 }
-      }
-      from += batch
-    }
     val route = element_at(
-      array(remap.map(lit(_)).toIndexedSeq: _*), (fid + 1).cast("int"))
+      array(exactPartitionRemap(n).map(lit(_)).toIndexedSeq: _*), (fid + 1).cast("int"))
     df.repartition(n, route)
   }
 
+  /** remap(p) = the smallest v >= 0 that HashPartitioning routes to
+    * partition p of n: pmod(Murmur3_x86_32.hashLong(v, 42), n) == p, the
+    * hash `functions.hash` and the shuffle compute for a long. Expected
+    * n·ln n candidates (coupon collector).
+    */
+  private[layout] def exactPartitionRemap(n: Int): Array[Long] = {
+    val remap = new Array[Long](n)
+    val seen = new Array[Boolean](n)
+    var found = 0
+    var v = 0L
+    while (found < n) {
+      val p = math.floorMod(
+        org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(v, 42), n)
+      if (!seen(p)) { seen(p) = true; remap(p) = v; found += 1 }
+      v += 1
+    }
+    remap
+  }
+
+  /** Snap each sampled z-key cut to the COARSEST power-of-two boundary
+    * that stays within its slack window (half the gap to each neighbor
+    * cut, so rough balance is preserved). Coarser alignment = whole
+    * quadrants at a higher level = tighter per-file bounding boxes.
+    * Sequential: each window is additionally floored just above the
+    * previous snapped cut, so the cut COUNT survives (file sizing is a
+    * real constraint — merging cuts doubles a file). Pathological
+    * integer-adjacent cuts may still collide; the final distinct only
+    * fires then.
+    */
   private[layout] def snapCuts(raw: Array[Long], totalBits: Int): Array[Long] = {
     val sorted = raw.sorted.distinct
     val domainHi = if (totalBits >= 63) Long.MaxValue else 1L << totalBits

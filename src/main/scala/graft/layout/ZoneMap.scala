@@ -96,9 +96,21 @@ case class TableManifest(
     // table carries). In MEMORY `files` is always fully populated;
     // [[ZoneMap.read]] attaches the sidecar transparently. None on
     // small tables and pre-r18 manifests.
-    filesRef: Option[String] = None) {
+    filesRef: Option[String] = None,
+    // the table's Spark schema (StructType JSON, hive partition columns
+    // included, as a plain parquet read of the dir infers it). Recorded
+    // by the layout write and carried by every commit's `copy`, so
+    // readers and mutators skip the parquet footer-inference job a
+    // schemaless read pays. None on manifests written before the field:
+    // [[ZoneMap.schemaOf]] infers it then, and the next keyed commit
+    // records it.
+    schema: Option[String] = None) {
 
   def hivePartitions: Seq[String] = partitionCols.getOrElse(Nil)
+
+  /** The recorded Spark schema, when there is one. */
+  def sparkSchema: Option[StructType] =
+    schema.map(DataType.fromJson(_).asInstanceOf[StructType])
 
   /** The record key as a column tuple: `recordKeys` when composite,
     * else the legacy single `recordKey`. Empty = unkeyed table.
@@ -285,6 +297,13 @@ object ZoneMap {
         Some(col(c).cast(TimestampType).cast(DoubleType))
       case _ => None
     }
+
+  /** The table's Spark schema: the manifest's recorded one, else (a
+    * manifest written before schemas were recorded) the one a plain
+    * parquet read of `dir` infers, which costs a footer-inference job.
+    */
+  def schemaOf(spark: SparkSession, dir: String, m: TableManifest): StructType =
+    m.sparkSchema.getOrElse(spark.read.parquet(dir).schema)
 
   /** One distributed pass over a written table dir computing per-file
     * min/max for `statsCols` (groupBy input_file_name — scales with files).

@@ -116,9 +116,6 @@ object DedupQueries {
     * signatures, so unbounded duplicate groups would make one bucket
     * quadratic (same hazard the q33b hot-bucket cap bounds).
     */
-  private def minhashVerifiedPairs(s: SparkSession, d: String): DataFrame =
-    minhashVerifiedPairs(docs(s, d))
-
   private[queries] def minhashVerifiedPairs(dd: DataFrame): DataFrame =
     minhashVerifiedPairsFrom(tokens(dd))
 
@@ -643,14 +640,6 @@ object DedupQueries {
         minhashCandidates(sigs, None, DegenerateBucketCap, Some(c.mhMax), c.mhHot),
         ss.select(col("doc_id"), col("hs"))))
   }
-
-  /** Dev-probe access to the pair pipelines (tools.CcProbe). */
-  def pairsForProbe(s: SparkSession, d: String, kind: String): DataFrame =
-    kind match {
-      case "simhash" => simhashPairs(s, d)
-      case "jaccard" => jaccardPairs(s, d)
-      case "minhash" => minhashVerifiedPairs(s, d)
-    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Exact dedup accounting by text hash, per language.

@@ -229,25 +229,16 @@ object SfcTable {
     * parquet read would, partition-column predicates prune DIRECTORIES
     * through Spark's own partitionFilters path, and zone predicates
     * keep pruning the surviving FILES — the two prunings compose.
+    *
+    * The schema is the one the manifest records, so an open runs no
+    * Spark job. A manifest written before schemas were recorded infers
+    * it from the parquet footers (one job per open) until its next keyed
+    * commit records it.
     */
-  /** Inferred-schema memo keyed by (canonical dir, manifest generation):
-    * the schemaless parquet read below pays a fixed-latency footer job on
-    * EVERY open (the round-11 "Next #4" cost PrunedScan.read avoids via
-    * its caller-supplied schema), yet the schema can only change through
-    * a commit, which bumps the generation. Metadata-only (same category
-    * as Spark's FileStatusCache) — never query results. Bounded: cleared
-    * wholesale past 64 table generations.
-    */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), StructType]()
-
   def open(spark: SparkSession, dir: String): DataFrame = {
     val manifest = ZoneMap.read(dir)
     val root = new Path(dir)
-    if (schemaCache.size > 64) schemaCache.clear()
-    val schema = schemaCache.computeIfAbsent(
-      (ZoneMap.canonical(dir), manifest.generation.getOrElse(0L)),
-      _ => spark.read.parquet(dir).schema)
+    val schema = ZoneMap.schemaOf(spark, dir, manifest)
     val index = new GraftFileIndex(spark, root, manifest, schema)
     // partition columns come back typed from the inferred spec (the
     // userSpecifiedSchema passed above pins their types to the plain

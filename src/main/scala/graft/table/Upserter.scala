@@ -31,10 +31,9 @@ object Upserter {
     aligned.select(schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
   }
 
-  /** Above this many distinct batch keys the affected-file test falls
-    * back from the exact key-set (NumIn) to the key RANGE: the driver
-    * collect stays bounded, and a batch that large intersects most
-    * zones anyway.
+  /** Above this many batch rows the affected-file test falls back
+    * from the exact key-set (NumIn) to the key RANGE: the driver collect
+    * stays bounded, and a batch that large intersects most zones anyway.
     */
   val KeyPruneLimit: Int = 100000
 
@@ -51,11 +50,19 @@ object Upserter {
   private[table] var testHookBeforeCommit: () => Unit = () => ()
 
   /** Upsert `batch` into the layout table at `dir`. Returns the refreshed
-    * manifest. Record key tuple (single or composite) and precombine
-    * column come from the manifest.
+    * manifest. Record key tuple (single or composite), precombine
+    * column and the table's Spark schema come from the manifest, so no
+    * read of the table infers a schema.
+    *
+    * Spark jobs of a small sorted upsert with a key index, in order: the
+    * key census (one bounded collect that also rejects NULL record
+    * keys), the bloom lookup, the rewrite's layout sample, the write
+    * (its dedup and routing shuffles included), the new files' stats and
+    * their bloom rows.
     *
     *  - `sortRewrites`: re-run the recorded layout sort WITHIN the
-    *    rewritten file set (range-partitioned on the layout key), so a
+    *    rewritten file set ([[graft.layout.LayoutWriter.sortedRewrite]]:
+    *    cuts from one deterministic sample), so a
     *    scattered upsert degrades pruning proportionally to the bytes it
     *    touches instead of collapsing it to 1x (the RQ7 decay cliff,
     *    results/rq7_layout/). DEFAULT ON since round 14 (a no-op for
@@ -89,11 +96,13 @@ object Upserter {
       throw new IllegalArgumentException(s"$dir has no recordKey — cannot upsert")
     val precombine = manifest.precombineCol
 
-    val table = spark.read.parquet(dir)
-    val alignedBatch = alignSchema(batch, table.schema)
+    // the manifest's recorded schema (no footer-inference job; a legacy
+    // manifest infers it once here and this commit records it)
+    val schema = ZoneMap.schemaOf(spark, dir, manifest)
+    val alignedBatch = alignSchema(batch, schema)
 
     // File-scoped COW: find files whose key zones intersect the batch
-    // keys — by exact key SET per key column when the distinct key
+    // keys — by exact key SET per key column when the batch's key
     // tuples fit the driver bound (scattered keys then only touch the
     // files that actually hold them: a 1k-key batch over an 800k-file
     // table rewrites <=1k file groups, where a [min,max] range test
@@ -103,13 +112,17 @@ object Upserter {
     // CAST(DATE AS DOUBLE), the round-13 date-key crash); string keys
     // prune through StrIn/StrBetween. For a composite key the
     // per-column IN conjunction is a superset of the tuple set — sound.
-    // ONE bounded collect also yields the xxhash64 tuple hashes the
-    // bloom sidecar probe uses (computed on the raw typed columns, so
-    // longs above 2^53 never round — round-13 ADVICE).
+    // ONE bounded collect, the key census, also yields the xxhash64
+    // tuple hashes the bloom sidecar probe uses (computed on the raw
+    // typed columns, so longs above 2^53 never round — round-13 ADVICE).
+    // It is one Spark job however the batch is partitioned: one task
+    // reads the batch's key tuples until the bound (bounded work either
+    // way), and the driver deduplicates them. A distinct() would add a
+    // shuffle, and a take over many partitions more jobs, to every upsert.
     val statsKeys = keys.filter(manifest.statsCols.contains)
     val zoneCols: Seq[(String, Boolean, org.apache.spark.sql.Column)] =
       statsKeys.zipWithIndex.map { case (k, i) =>
-        ZoneMap.numericView(table.schema(k).dataType, k) match {
+        ZoneMap.numericView(schema(k).dataType, k) match {
           case Some(num) => (k, true, num.as(s"__z_$i"))
           case None => (k, false, col(k).cast("string").as(s"__z_$i"))
         }
@@ -118,38 +131,44 @@ object Upserter {
     // row can't be scoped by zones or blooms, so it would bypass the
     // file-scoped dedup — null-key rows sitting in unaffected files are
     // never deduped against, and repeated upserts of the same null-key
-    // row would silently accumulate duplicates (round-14 ADVICE).
-    val nonNullKeys = keys.map(col(_).isNotNull).reduce(_ && _)
-    if (alignedBatch.filter(!nonNullKeys).limit(1).count() > 0)
+    // row would silently accumulate duplicates (round-14 ADVICE). The
+    // check rides on the key census: a NULL-key row is a tuple flagged
+    // `__null` (every row is collected when the census fits the bound),
+    // and the key-range aggregate past the bound counts them.
+    val anyNullKey = keys.map(col(_).isNull).reduce(_ || _)
+    def rejectNullKeys(): Nothing =
       throw new IllegalArgumentException(
         s"upsert batch for $dir has NULL record-key values in " +
           s"(${keys.mkString(", ")}) — null record keys are not " +
           "upsertable (same contract as Hudi); filter or fill them first")
     val tuples: Array[org.apache.spark.sql.Row] = alignedBatch
-      .filter(nonNullKeys)
-      .select((KeyIndex.keyHashCol(keys).as("__h") +: zoneCols.map(_._3)): _*)
-      .distinct()
-      .limit(KeyPruneLimit + 1).collect()
+      .select((anyNullKey.as("__null") +: KeyIndex.keyHashCol(keys).as("__h") +:
+        zoneCols.map(_._3)): _*)
+      .coalesce(1).limit(KeyPruneLimit + 1).collect()
     val exact = tuples.length <= KeyPruneLimit
-    val preds: Seq[ZonePredicate] =
-      if (statsKeys.isEmpty) Nil
-      else if (exact)
-        zoneCols.zipWithIndex.map { case ((k, isNum, _), i) =>
+    if (exact && tuples.exists(_.getBoolean(0))) rejectNullKeys()
+    // with the zone predicates, the batch's row count for the rewrite's
+    // sample rate: the census rows, or the range aggregate's count
+    val (preds, batchRows): (Seq[ZonePredicate], Long) =
+      if (exact)
+        (zoneCols.zipWithIndex.map { case ((k, isNum, _), i) =>
           if (isNum)
-            NumIn(k, tuples.iterator.map(_.getDouble(i + 1)).toSeq.distinct)
-          else StrIn(k, tuples.iterator.map(_.getString(i + 1)).toSeq.distinct)
-        }
+            NumIn(k, tuples.iterator.map(_.getDouble(i + 2)).toSeq.distinct)
+          else StrIn(k, tuples.iterator.map(_.getString(i + 2)).toSeq.distinct)
+        }, tuples.length.toLong)
       else {
-        // too many distinct tuples for the driver bound: per-column
-        // [min,max] conjunction via one distributed agg
-        val aggs = zoneCols.indices.flatMap { i =>
-          Seq(min(col(s"__z_$i")).as(s"__lo_$i"),
-            max(col(s"__z_$i")).as(s"__hi_$i"))
-        }
-        val r = alignedBatch.filter(nonNullKeys)
-          .select(zoneCols.map(_._3): _*)
+        // too many tuples for the driver bound: per-column
+        // [min,max] conjunction via one distributed agg, which also
+        // counts the batch's rows and its NULL-key rows
+        val aggs = count(lit(1)).as("__rows") +: count(when(col("__null"), 1)).as("__nulls") +:
+          zoneCols.indices.flatMap { i =>
+            Seq(min(col(s"__z_$i")).as(s"__lo_$i"), max(col(s"__z_$i")).as(s"__hi_$i"))
+          }
+        val r = alignedBatch
+          .select((anyNullKey.as("__null") +: zoneCols.map(_._3)): _*)
           .agg(aggs.head, aggs.tail: _*).collect()(0)
-        zoneCols.zipWithIndex.map { case ((k, isNum, _), i) =>
+        if (r.getAs[Long]("__nulls") > 0) rejectNullKeys()
+        (zoneCols.zipWithIndex.map { case ((k, isNum, _), i) =>
           if (isNum) {
             val lo = Option(r.getAs[java.lang.Double](s"__lo_$i"))
               .map(_.doubleValue).getOrElse(0d)
@@ -161,7 +180,7 @@ object Upserter {
             val hi = Option(r.getAs[String](s"__hi_$i")).getOrElse("")
             StrBetween(k, lo, hi)
           }
-        }
+        }, r.getAs[Long]("__rows"))
       }
     val (affected0, untouched0) =
       if (preds.isEmpty) (manifest.files, Seq.empty[FileEntry])
@@ -175,7 +194,7 @@ object Upserter {
     // affected.
     val (affected, untouched) =
       if (exact && KeyIndex.exists(dir)) {
-        val hashes = tuples.iterator.map(_.getLong(0)).toSeq.distinct
+        val hashes = tuples.iterator.map(_.getLong(1)).toSeq.distinct
         KeyIndex.affectedPaths(spark, dir, hashes, manifest) match {
           case Some(paths) =>
             val (a, skipped) = affected0.partition(f =>
@@ -187,8 +206,8 @@ object Upserter {
 
     val existing =
       if (affected.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], table.schema)
-      else StagedRewrite.readFiles(spark, dir, affected.map(_.path), partitioned)
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      else StagedRewrite.readFiles(spark, dir, affected.map(_.path), partitioned, Some(schema))
 
     // Dedup on the key TUPLE: max precombine wins; the incoming batch
     // wins ties (__src=1).
@@ -227,17 +246,12 @@ object Upserter {
     // sorted COW: the rewritten rows re-enter the recorded layout
     // order, so each new file's zones stay as tight as the merged
     // key span allows ("baseline" layouts have no keys and stay on
-    // the plain path)
-    val sortKeys =
-      if (!sortRewrites || manifest.layoutCols.isEmpty) Nil
-      else LayoutWriter.curveKeyOrCols(
-        deduped, manifest.layoutCols, manifest.bits, manifest.layout)
+    // the plain path). The layout's sample scans the pre-dedup merge,
+    // so the dedup pipeline runs once, for the write.
     val arranged =
-      if (sortKeys.isEmpty) deduped.repartition(numFiles)
-      else if (numFiles == 1)
-        deduped.repartition(1).sortWithinPartitions(sortKeys: _*)
-      else deduped.repartitionByRange(numFiles, sortKeys: _*)
-        .sortWithinPartitions(sortKeys: _*)
+      if (!sortRewrites || manifest.layoutCols.isEmpty) deduped.repartition(numFiles)
+      else LayoutWriter.sortedRewrite(deduped, merged, manifest, numFiles,
+        sourceRows = affected.map(_.rows).sum + batchRows)
 
     // Stage the rewrite, then move the (uuid-unique) part files in —
     // under their partition subdirs when the table is hive-partitioned.
@@ -251,7 +265,8 @@ object Upserter {
     val newEntries =
       if (moved.isEmpty) Seq.empty[FileEntry]
       else ZoneMap.collectStatsDf(
-        StagedRewrite.readFiles(spark, dir, moved, partitioned), manifest.statsCols)
+        StagedRewrite.readFiles(spark, dir, moved, partitioned, Some(schema)),
+        manifest.statsCols)
     // commit order matches KeyedDelta (round-11 ADVICE): atomically
     // publish the manifest FIRST, delete superseded files after — a
     // crash in between leaves orphan old files a manifest-driven reader
@@ -280,7 +295,8 @@ object Upserter {
           else base.files.filterNot(f => affectedPaths(ZoneMap.canonical(f.path)))
         try updated = ZoneMap.writeCas(dir, base.copy(
           files = untouchedNow ++ newEntries,
-          commitsSinceCluster = Some(base.commitsSinceCluster.getOrElse(0) + 1)))
+          commitsSinceCluster = Some(base.commitsSinceCluster.getOrElse(0) + 1),
+          schema = Some(schema.json)))
         catch {
           case e: ConcurrentCommitException =>
             if (attempt >= 5) throw e

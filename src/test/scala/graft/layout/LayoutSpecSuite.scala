@@ -273,4 +273,51 @@ class LayoutSpecSuite extends SparkTestBase {
         s"StrIn($vals) vs zone ${r.minStr}-${r.maxStr} allNull=${r.allNull}")
     }
   }
+
+  test("exactPartition's driver remap routes like HashPartitioning (n = 1..64)") {
+    val spark2 = spark
+    import spark2.implicits._
+    val remaps = (1 to 64).flatMap { n =>
+      LayoutWriter.exactPartitionRemap(n).zipWithIndex.map { case (v, p) => (n, p, v) }
+    }
+    // the routing the shuffle applies to a long: pmod(hash(v), n)
+    val wrong = remaps.toDF("n", "p", "v")
+      .filter(pmod(hash(col("v")), col("n")) =!= col("p"))
+    assert(wrong.count() == 0, wrong.limit(5).collect().mkString(", "))
+    // and rows land in the partition their bucket id names
+    val routed = LayoutWriter.exactPartition(spark.range(2000).toDF(), col("id") % 13, 13)
+      .filter(spark_partition_id() =!= (col("id") % 13).cast("int"))
+    assert(routed.count() == 0)
+  }
+
+  test("sortedRewrite keeps every row and places it deterministically " +
+    "(string, date and NULL coordinates)") {
+    val spark2 = spark
+    import spark2.implicits._
+    val rnd = new Random(5)
+    val rows = (1 to 6000).map { i =>
+      (i.toLong,
+        if (i % 50 == 0) null else f"tenant-${rnd.nextInt(500)}%04d",
+        if (i % 70 == 0) null
+        else java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(18000L + rnd.nextInt(900))),
+        rnd.nextDouble())
+    }
+    val dir = tmpDir("graft_sorted_rewrite")
+    LayoutWriter.write(rows.toDF("k", "s", "d", "v"), dir,
+      LayoutSpec("zorder", Seq("s", "d"), numFiles = Some(4), recordKey = Some("k")))
+    val m = ZoneMap.read(dir)
+    val src = spark.read.parquet(dir)
+    // a sample of every row, then a thin hash-selected one
+    for (sourceRows <- Seq(m.totalRows, 1000L * m.totalRows)) {
+      val out = LayoutWriter.sortedRewrite(src, src, m, numFiles = 4, sourceRows)
+      assert(out.columns.toSeq == src.columns.toSeq)
+      def placed = LayoutWriter.sortedRewrite(src, src, m, numFiles = 4, sourceRows)
+        .select(spark_partition_id(), col("k")).collect().map(_.toString).sorted.toSeq
+      val first = placed
+      assert(first == placed, s"rows moved between two identical rewrites ($sourceRows)")
+      assert(first.map(_.split(",")(0)).distinct.length > 1, "one file for four")
+      assert(out.count() == 6000L)
+      assert(out.exceptAll(src).isEmpty && src.exceptAll(out).isEmpty)
+    }
+  }
 }
